@@ -9,7 +9,7 @@ in DuckDB over the same tables and compares: columns sorted by name, rows
 sorted by all columns, exact match for non-floats, bitwise-with-report for
 floats (our queries are engineered to be bit-deterministic).
 """
-import sys, json, glob, math
+import sys, json, glob, math, os
 import duckdb
 import pyarrow.parquet as pq
 
@@ -19,7 +19,10 @@ out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 con = duckdb.connect()
 for p in glob.glob(f"{sf}/*.parquet"):
     name = p.split("/")[-1].replace(".parquet", "")
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+    # GenScale tiers are Spark-written DIRECTORIES; the shipped tiers are
+    # single files — glob the dir form
+    src = f"{p}/*.parquet" if os.path.isdir(p) else p
+    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{src}')")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails = []

@@ -56,11 +56,16 @@ import org.apache.spark.sql.SparkSession
   * materialize shingle/band tables that would otherwise accumulate
   * across 98 queries × [[Runs]] runs until storage eviction + GC churn
   * pollute *neighboring* queries' timings (the round-2 dd2 23.5 s /
-  * tx4 7 s outliers). */
+  * tx4 7 s outliers).
+  *
+  * Positional arguments name the queries to sweep (default: all) —
+  * the focused re-measurement of a few queries, e.g. an n=8 noop run:
+  *   SPARK_GRAFT_RUNS=8 SPARK_GRAFT_BENCH_ACTION=noop \
+  *     SPARK_GRAFT_DETAIL_OUT=focus.json sbt 'runMain graft.Bench j1_spatial_join' */
 object Bench {
   /** 5, not 3: a 3-run median is one slow run away from being dragged
     * to the middle value under machine load — the round-4 j1/a10
-    * false-regression mechanism (adjudicated with n=8 in BenchFocus).
+    * false-regression mechanism (adjudicated with a focused n=8 run).
     * A 5-run median tolerates two outliers per query. Env-overridable
     * (SPARK_GRAFT_RUNS) for the sf1 throughput tier, where a 5-run
     * sweep over 10× data would run for hours — the sf1 artifact trades
@@ -119,8 +124,8 @@ object Bench {
     * episodes. Tier bound: the cap assumes the tier's genuine idle
     * floor is under ~2× static (true at sf0.1/sf1, the full-Bench
     * tiers); a tier whose idle floor exceeds the cap (sf10-class)
-    * would mass-flag — that tier is measured via BenchFocus, which
-    * has no suspect gate, by design. */
+    * would mass-flag — that tier is measured by focused runs whose
+    * medians are read against queries_min, not the suspect list. */
   def envelopeFor(cpus: Int, warmFloorSec: Double): Double =
     math.min(math.max(envelopeFor(cpus), 2.0 * warmFloorSec),
       4.0 * envelopeFor(cpus))
@@ -166,12 +171,37 @@ object Bench {
   val LoadFlagMinDeltaSec = 0.5
 
   /** Pure flag rule (spec-tested): flagged iff the sweep started
-    * loaded AND the median sits far above the run minimum. */
-  def loadFlagged(loadStart: Double, p50: Double, minRun: Double): Boolean =
-    loadStart >= 1.0 && p50 >= LoadFlagRatio * minRun &&
-      p50 - minRun >= LoadFlagMinDeltaSec
+    * loaded AND the median sits far above the run minimum. The rule
+    * reads the millisecond values the artifact PRINTS, not the raw
+    * doubles: a reader checking queries_p50 against queries_min must
+    * reach the same verdict (tx28 printed 1.184 = 2 × 0.592 on a 1.43
+    * start, yet its raw p50 sat a hair under 2×, so it went unflagged). */
+  def loadFlagged(loadStart: Double, p50: Double, minRun: Double): Boolean = {
+    def ms(x: Double): Long = math.round(fmt(x, 3).toDouble * 1000)
+    val (p, m) = (ms(p50), ms(minRun))
+    loadStart >= 1.0 && p >= LoadFlagRatio * m &&
+      p - m >= LoadFlagMinDeltaSec * 1000
+  }
+
+  // Locale.ROOT: f"%.3f" under a comma-decimal default locale would
+  // emit 26,123 and corrupt the machine-parsed JSON line
+  def fmt(x: Double, dec: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(x))
+
+  /** The one timing/release step every measurement main shares: times
+    * `body`, then drops every cached/checkpointed block OUTSIDE the
+    * timed region — also when `body` throws — so no unit of work's
+    * residency leaks into the next one's timing. */
+  def timed[A](spark: SparkSession)(body: => A): (Double, A) = {
+    val t0 = System.nanoTime()
+    try { val a = body; ((System.nanoTime() - t0) / 1e9, a) }
+    finally graft.ops.Materialize.releaseAll(spark)
+  }
 
   def main(args: Array[String]): Unit = {
+    // validate up front: a typo must not cost a session and a warmup
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // "both" (default): one artifact carries the noop headline AND the
@@ -197,9 +227,7 @@ object Bench {
     // checkpoint flags as before.
     def calibQuery(): Unit =
       Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
-    def timeOne(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+    def timeOne(body: => Unit): Double = timed(spark)(body)._1
     val warmFloor = (1 to 5).map(_ => timeOne(calibQuery())).min
     // gate on the PRE-warmup loadavg only: a post-warmup re-sample
     // cannot distinguish a co-tenant from the bench's own just-finished
@@ -238,7 +266,8 @@ object Bench {
         loadAvg()))
     }
 
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
+    val sorted = SparkEntry.queries.toSeq
+      .filter(q => args.isEmpty || args.contains(q._1)).sortBy(_._1)
     val calibPre = calibrate(Runs) // endpoint medians keep r5/r6 continuity
     checkpoint(0) // after calibPre: its 5 runs settle JIT first
 
@@ -256,9 +285,6 @@ object Bench {
             err = Some(s"${e.getClass.getSimpleName}: " +
               Option(e.getMessage).getOrElse("").take(200))
           }
-          // outside the timed region: drop this run's materialized
-          // blocks so no query's residency leaks into another's timing
-          graft.ops.Materialize.releaseAll(spark)
           i += 1
         }
         ts.toSeq
@@ -314,10 +340,6 @@ object Bench {
       System.err.println(s"[bench] ${suspects.size} query medians recorded " +
         s"outside the idle envelope: ${suspects.mkString(", ")}")
 
-    // Locale.ROOT: f"%.3f" under a comma-decimal default locale would
-    // emit 26,123 and corrupt the machine-parsed JSON line
-    def fmt(x: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(x))
     type T = (String, Option[Double], Double, Double, Double, Double, Double)
     def obj(pick: T => Double, dec: Int): String =
       timings.map(t => s""""${esc(t._1)}":${fmt(pick(t), dec)}""").mkString("{", ",", "}")

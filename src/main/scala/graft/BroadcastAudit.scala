@@ -21,8 +21,8 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.BroadcastAudit [sfDir]'
   *
   * Building a frame may execute Materialize seams (eager
-  * checkpoints), so the audit releases each query's lifecycle like
-  * BenchFocus does.
+  * checkpoints), so the audit releases each query's lifecycle through
+  * [[Bench.timed]], like the bench does.
   */
 object BroadcastAudit {
   val FactTables = Seq("documents", "embeddings", "lineitem", "orders",
@@ -88,15 +88,14 @@ object BroadcastAudit {
     var flagged = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
-        fanoutBlindSides(plan).foreach { case (facts, head) =>
+        val (_, sides) = Bench.timed(spark)(
+          fanoutBlindSides(fn(spark, sfDir).queryExecution.executedPlan))
+        sides.foreach { case (facts, head) =>
           flagged += 1
           println(s"FLAG $name FANOUT-BLIND broadcast of ${facts.mkString(",")}:\n    | " + head)
         }
       } catch {
         case e: Exception => println(s"ERR $name ${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
-      } finally {
-        graft.ops.Materialize.releaseAll(spark)
       }
     }
     println(s"[broadcast-audit] $sfDir flagged=$flagged of ${SparkEntry.queries.size}")

@@ -13,7 +13,10 @@ import java.nio.file.{Files, Paths}
   * for iterative queries that execute jobs while building (BFS rounds,
   * label propagation), the driver-side loop runs as part of building
   * the frame, so the dump reflects the final returned frame's plan —
-  * the same object the bench times. */
+  * the same object the bench times. The printed seconds are that
+  * frame build (Materialize seams included); every block is released
+  * after each query. The join/exchange skeleton of a dump is
+  * `grep -E 'Join|Exchange|Window|Scan' <file>`. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     if (args.length < 4) {
@@ -31,12 +34,13 @@ object ExplainDump {
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), formatted)
-      graft.ops.Materialize.releaseAll(spark)
-      println(s"[explaindump] wrote ${name}_$suffix.txt")
+      val (sec, _) = Bench.timed(spark) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+          df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+      }
+      println(f"[explaindump] wrote ${name}_$suffix.txt ($sec%.2f s)")
     }
     spark.stop()
   }

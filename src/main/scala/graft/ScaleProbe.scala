@@ -1,22 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-linearity probe: replicates the documents corpus N× (each
-  * copy's text salted with its copy index so LSH candidates never
-  * cross copies — the pair structure grows linearly by construction)
-  * and times the most shuffle-intensive pipelines at each N.
-  * Near-linear wall-time growth is the measurable form of the "no
+import graft.ops.{Dedup, Graph, Materialize, Similarity, TextStats}
+
+/** Scale-linearity probe: replicates the corpora N× ([[GenScale]]'s
+  * replicators) and times the most shuffle-intensive pipelines at each
+  * N. Near-linear wall-time growth is the measurable form of the "no
   * quadratic blowup, keyed shuffles only" claims the operator
-  * scaladocs make. Run:
-  *   SPARK_GRAFT_SF_DIR=... sbt 'runMain graft.ScaleProbe 1 4 10'
+  * scaladocs make. Integer args are factors (default 1 4 10); any
+  * other arg selects a case by name (default: all). Run:
+  *   SPARK_GRAFT_SF_DIR=... sbt 'runMain graft.ScaleProbe 1 4 10 [case...]'
+  *
+  * Every case runs the same way: its corpora are replicated and
+  * localCheckpointed OUTSIDE the timed region, the body is timed, and
+  * every block is released before the next case ([[Bench.timed]]). One
+  * JSON row per (factor, case): sec, rows (the case's row count or
+  * consumed aggregate) and parts — the post-run
+  * `spark.sql.shuffle.partitions`, i.e. the layout the Materialize
+  * seam ratchet chose for this case before release.
   *
   * The embeddings corpus replicates by a per-copy deterministic ±1
-  * SIGN-FLIP diagonal (see [[replicatedEmb]]: within-copy geometry
-  * exactly preserved, cross-copy cosines decorrelated toward 0, so
-  * the true pair structure is linear in N by construction; the fixed
-  * LSH hyperplanes see per-copy bucket patterns, so copies spread
+  * SIGN-FLIP diagonal ([[GenScale.replicatedEmb]]: within-copy
+  * geometry exactly preserved, cross-copy cosines decorrelated toward
+  * 0, so the true pair structure is linear in N by construction; the
+  * fixed LSH hyperplanes see per-copy bucket patterns, so copies spread
   * across buckets instead of stacking in them). Note the expected
   * shapes differ by design:
   *   - dd9 (SimHash bands): 2^15 values per band — buckets stay tiny,
@@ -38,481 +47,250 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
 
-  def replicated(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.documents(s, d)
-    (0 until n).map { i =>
-      base.select(
-        (col("doc_id") + lit(i.toLong * 10_000_000L)).as("doc_id"),
-        // salt EVERY token with the copy index: copies become textually
-        // disjoint (zero shared shingles), so the true near-dup pair
-        // structure grows linearly in n — a tail-only salt would leave
-        // cross-copy clones at Jaccard ≈ 1 and measure the quadratic
-        // clone structure instead of the engine
-        regexp_replace(col("text"), "(\\S+)", s"c${i}_$$1").as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
+  type Replica = (SparkSession, String, Int) => DataFrame
+
+  /** A named case: the corpora it reads (each replicated N× and
+    * checkpointed before timing) and the timed body over them. */
+  final case class Case(name: String, corpora: Seq[Replica])(
+      val body: Seq[DataFrame] => Long)
+
+  private def on(name: String, corpus: Replica)(body: DataFrame => Long) =
+    Case(name, Seq(corpus))(dfs => body(dfs.head))
+
+  private val docs: Replica = GenScale.replicated
+  private val emb: Replica = GenScale.replicatedEmb
+  private val events: Replica = GenScale.replicatedEvents
+  private val orders: Replica = GenScale.replicatedOrders
+
+  /** First column of a one-row aggregate — the consumed-column probes
+    * aggregate over the expensive output so pruning can't drop it. */
+  private def first(df: DataFrame, aggs: Column*): Long =
+    df.agg(aggs.head, aggs.tail: _*).collect()(0).getLong(0)
+
+  private def lshEdges(d: DataFrame): DataFrame =
+    Dedup.minhashLshPairs(d, "doc_id", "text", 0.1)
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
+
+  val cases: Seq[Case] = Seq(
+    on("lsh", docs)(Dedup.minhashLshPairs(_, "doc_id", "text", 0.1).count()),
+    on("cluster", docs)(d => Dedup.labelPropagation(lshEdges(d)).count()),
+    on("pack", docs) { d =>
+      val toks = d.select(col("doc_id"),
+        size(TextStats.words(col("text"))).cast("long").as("n_tokens"))
+      graft.ops.PrefixSum.exclusive(toks, "doc_id", "n_tokens",
+        d.sparkSession.sparkContext.defaultParallelism).count()
+    },
+    on("simhash", docs)(Dedup.simhashPairsOf(_).count()),
+    // a bare count() lets column pruning DROP the reassembly (the
+    // collect_list/array_sort kept_text is the expensive half) — the
+    // probe aggregates over kept_text so the full operator runs
+    on("dfprune", docs)(d => first(TextStats.dfPruneOf(d),
+      count(lit(1)), sum(length(col("kept_text"))))),
+    // the eval set grows with n here (salted copies shingle-disjoint),
+    // so this measures the corpus-side probe stream against a bitmap
+    // whose fill also grows — the conservative direction
+    on("bloom", docs)(d => first(graft.ops.Sketch.bloomDecontaminateOf(d),
+      count(lit(1)), sum(col("n_bloom_hits")))),
+    // exact Jaccard: salted copies are shingle-disjoint, so the
+    // inverted index's Σ df² candidate volume grows linearly in n —
+    // the curve that evidences the all-pairs → inverted-index rewrite
+    on("jaccard", docs)(Dedup.ngramJaccardPairsOf(_).count()),
+    on("ivf", emb)(Similarity.ivfTopKOf(_,
+      trainCap = Similarity.IvfTrainCap).count()),
+    on("knn", emb)(Similarity.knnGraphOf(_).count()),
+    // dd5: banded sign-LSH near-dup pairs; the derived geometry
+    // (bands × per-band planes) self-sizes from the corpus count
+    // (Dedup.embBandPlanesFor), so per-band buckets grow as
+    // 2^planes ∝ n, holding Σ bucket² candidate volume ~linear. The
+    // builder's internal count scans the LOCALCHECKPOINTED blocks, not
+    // the replication transform — cheap, and deliberately uncached
+    // (Materialize.cachedCount skips LogicalRDD-rooted plans)
+    on("neardup", emb)(Dedup.embeddingNearDupOf(_).count()),
+    // j4: anti-join MERGE on replicated orders — both sides of the
+    // upsert grow linearly; the join is keyed (no broadcast of the
+    // growing side at scale is the claim under test)
+    on("merge", orders)(graft.merge.Upsert.mergeOrdersOf(_).count()),
+    // j6b: bucketed as-of with the key domain held at 150 (the
+    // driver query's shape), so per-(key, bucket) groups grow
+    // linearly in n — the hot-key direction the bucketed two-phase
+    // carry exists to bound; the aggregate consumes the carried
+    // payload so column pruning can't drop phase 2
+    Case("asof", Seq(events, orders)) { case Seq(ev6, ord6) =>
+      val ev = ev6.select((col("user_id") % 150).as("k"),
+        date_trunc("second", col("ts")).as("t"), col("event_id"))
+      val o = ord6
+        .select((col("o_custkey") % 150).as("k"),
+          col("o_orderdate").as("t"), col("o_orderkey"))
+        .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
+      first(graft.ops.AsOf.asofLeftBucketed(ev, o, "o_orderkey")(
+          t => floor(unix_timestamp(t) / 86400L).cast("long")),
+        count(lit(1)), sum(col("asof_o_orderkey")))
+    },
+    // dd10: salted copies share zero grams, so both the Σ df²
+    // candidate volume on the anchor hash and the true span set grow
+    // linearly in n — superlinear time here would mean the anchor df
+    // head is quadratic, the failure the df-cap mitigation would fix
+    on("span", docs)(Dedup.duplicateSpansOf(_).count()),
+    // tx18: the first-occurrence window partitions by segment text;
+    // salted copies make segments copy-disjoint, so partition count
+    // grows ∝ n with bounded partition size — the aggregate consumes
+    // kept_text so pruning can't drop the reassembly half
+    on("segdedup", docs)(d => first(TextStats.segmentDedupOf(d),
+      sum(col("n_kept")), sum(length(col("kept_text"))))),
+    // g1: kNN build (the sim4 probe's cost) + 5 fixed integer
+    // rounds, each a keyed join + keyed agg over node-sized tables —
+    // the incremental cost over sim4 should stay a small constant
+    // factor at every scale
+    on("pagerank", emb)(Similarity.knnPagerankOf(_).count()),
+    // g2: kNN build + the compact-forward wedge join. Degree-ordered
+    // orientation bounds every out-degree by O(sqrt(m)), so wedge
+    // volume tracks edge count; sign-flipped copies keep kNN edges
+    // within copies, so Σ triangles is linear by construction — a
+    // superlinear time curve here would mean the orientation failed
+    // to tame a hub. The aggregate consumes the triangle column so
+    // pruning can't drop the wedge join.
+    on("tri", emb)(e => first(Graph.knnTrianglesOf(e), sum(col("triangles")))),
+    // w6: ONE shuffle on user_id with the user domain fixed, so
+    // per-user sorted lists grow ∝ n — the hot-key direction for the
+    // sort_array fold; time should stay ~linear (sort is n log n in
+    // the per-user list, lists are replication-bounded)
+    on("funnel", events)(e =>
+      first(graft.model.Analytics.funnelOf(e), sum(col("users")))),
+    // dd13: dd10's span table + a per-doc interval merge — the merge
+    // window partitions by doc_id (bounded groups), so the curve
+    // should track dd10's span curve; the aggregate consumes
+    // dup_tokens so the merge half can't be pruned away
+    on("coverage", docs)(d => first(Dedup.duplicateCoverageOf(d),
+      count(lit(1)), sum(col("dup_tokens")))),
+    // tx22: the (source, shingle) distinct grows ∝ n; after the
+    // distinct the per-hash fanout is bounded by the FIXED source
+    // count, so candidate rows also grow ∝ n — the pair matrix
+    // itself stays sources², constant
+    on("srcoverlap", docs)(d => first(TextStats.sourceOverlapOf(d),
+      count(lit(1)), sum(col("shared")))),
+    // tx25: salted copies are shingle-disjoint, so the
+    // first-occurrence aggregation's key space grows ∝ n with
+    // per-shingle df unchanged; output rows are exactly the docs —
+    // the aggregate consumes n_novel so the join-back can't prune
+    on("novelty", docs)(d => first(TextStats.ngramNoveltyOf(d),
+      sum(col("n_novel")), count(lit(1)))),
+    // w7: user domain fixed → per-user event lists grow ∝ n (the
+    // hot-key direction for the lead window); the transition matrix
+    // stays O(types²) so only the window stage scales
+    on("markov", events)(e =>
+      first(graft.model.Analytics.markovTransitionsOf(e), sum(col("n")))),
+    // q21a: fresh orderkeys per copy keep each order's supplier set
+    // intact, so returned rows, the distinct (order, supplier) table
+    // and the semi/anti probe volumes all grow ∝ n with per-orderkey
+    // fanout unchanged — superlinear time would mean the <> conjunct
+    // degraded the keyed joins
+    // (the supplier dim is read once, not replicated)
+    Case("blame", Seq(GenScale.replicatedLineitem,
+        (s, d, _) => Tables.supplier(s, d))) { case Seq(li, supp) =>
+      first(graft.model.Pricing.soleBlameOf(li, supp), sum(col("numwait")))
+    },
+    // kmv1: the (source, hash) distinct grows ∝ n (copies are
+    // shingle-disjoint); the bucket-cutoff prefilter keeps the
+    // per-source top-k sort input ~constant, and the pair stage is
+    // sources² regardless of n — so the curve should track the
+    // distinct alone
+    on("kmv", docs)(d => first(graft.ops.Sketch.kmvSetOpsOf(d),
+      count(lit(1)), sum(col("n_common")))),
+    // tx30: every stage is a doc-keyed window or (doc, pos) join
+    // over per-copy-bounded documents — the merge-application round
+    // must stay linear for BPE training to be viable at corpus scale
+    on("bpe", docs)(d =>
+      first(TextStats.bpeMergeRoundOf(d), sum(col("n_occurrences")))),
+    // sim8: training collects only PqSub × codes × subdim stats per
+    // round; encoding + ADC is one projection + broadcast lookups, so
+    // the curve should be ~linear in the corpus with a fixed offset
+    on("pq", emb)(Similarity.pqTopKOf(_).count()),
+    // rl1: the FastSS blocking keys inherit the near-unique low
+    // digits, so candidates and links must both grow ∝ n (copies
+    // shift keys by 11M — see GenScale.replicatedCustomer — so the
+    // true link structure is per-copy by construction). The pre-fix
+    // left-half blocking measured 21 s at 1× — this curve guards the
+    // rewrite.
+    on("rl", GenScale.replicatedCustomer)(
+      graft.ops.Linkage.recordLinkageOf(_).count()),
+    // g7: kNN build + ≤6 BFS rounds of frontier join + min-struct
+    // agg. Sign-flipped copies keep edges within copies and each
+    // copy carries its own ∝ n/97 seed slice, so reached counts grow
+    // ∝ n; rounds are diameter-capped, so the curve should track
+    // sim4's build plus a flat per-round keyed-join cost — the probe
+    // consumes dist so the propagation stages can't prune away
+    on("bfs", emb)(e => first(Graph.bfsLandmarksOf(e),
+      sum(col("reached")), sum(col("dist")))),
+    // g12 landmark centrality (multi-landmark BFS with per-round
+    // materialization + early exit) and g13 PageRank residual rounds:
+    // each round is a keyed frontier/rank join against the
+    // materialized symmetric edge table; the question at 10×/40× is
+    // whether rounds × per-round materialization stays ~linear in
+    // edges, and where pre-bucketing the edge table would start to pay
+    on("g12", emb)(Graph.landmarkCentralityOf(_).count()),
+    on("g13", emb) { e =>
+      val edges = Materialize(Similarity.knnGraphOf(e).select("src", "dst"),
+        Materialize.Local, "probe_g13_edges")
+      Similarity.pagerankResidualsOf(
+        edges, e.select("vec_id"), Similarity.PrIters).count()
+    },
+    // ord2: one PrefixSum pass over the bucket-major key — per-
+    // partition windows + O(partitions) driver offsets — so the
+    // curve should track the corpus linearly at any bucket skew
+    // (salted copies keep n_chars, so bucket POPULATIONS grow ∝ n
+    // while the bucket count stays fixed: the exact hot-key shape a
+    // per-bucket window would die on). The aggregate consumes
+    // schedule_key so pruning can't drop the rank machinery.
+    on("curriculum", docs)(d => first(graft.ops.Sampling.curriculumOrderOf(d,
+        d.sparkSession.sparkContext.defaultParallelism),
+      max(col("schedule_key")), count(lit(1)))),
+    // dd4 under a GLOBAL hot shingle: the same unsalted 3-token
+    // footer on every doc of every copy gives ONE shingle df = full
+    // corpus — the Σdf² detonation the PPJoin prefix filter exists
+    // to absorb (the unfiltered index would grow ∝ (n·docs)² on this
+    // corpus). The footer is deliberately SHORT: its solo Jaccard
+    // contribution 1/(n_a+n_b-1) < 1/10 for every pair, so the true
+    // pair structure stays the salted copies' linear one and output
+    // size cannot explain a superlinear bend. (A longer footer makes
+    // short-doc pairs genuinely qualify and the quadratic OUTPUT
+    // drowns the signal — measured 409k→39.6M pairs at 1×→10× with a
+    // 10-token footer.)
+    on("jacboiler", (s, d, n) => GenScale.replicated(s, d, n)
+      .withColumn("text", concat(col("text"), lit(" all rights reserved"))))(
+      Dedup.ngramJaccardPairsOf(_).count()),
+    // the DISTRIBUTED pointer-jumping connected-components path,
+    // forced past the driver union-find switch (localThreshold=0):
+    // per-copy-disjoint LSH pair graphs keep components and diameter
+    // per-copy-bounded, so rounds stay O(log d) = constant across
+    // factors and the curve should be ~linear in edges — the measured
+    // form of the warehouse-scale claim dd7/dd8 ride on.
+    on("distcc", docs)(d =>
+      Dedup.labelPropagation(lshEdges(d), localThreshold = 0L).count()))
+
+  /** Runs one case at factor `n`: (sec, rows, post-run shuffle
+    * partitions). Every block is released before it returns. */
+  def run(spark: SparkSession, sfDir: String, n: Int,
+      c: Case): (Double, Long, String) = {
+    val inputs = c.corpora.map(_(spark, sfDir, n).localCheckpoint(true))
+    val (sec, (rows, parts)) = Bench.timed(spark) {
+      (c.body(inputs), spark.conf.get("spark.sql.shuffle.partitions"))
+    }
+    (sec, rows, parts)
   }
 
   def main(args: Array[String]): Unit = {
+    val (ints, names) = args.toSeq.partition(_.forall(_.isDigit))
+    val factors = if (ints.nonEmpty) ints.map(_.toInt) else Seq(1, 4, 10)
+    val unknown = names.filterNot(cases.map(_.name).toSet)
+    require(unknown.isEmpty, s"unknown cases: ${unknown.mkString(", ")}")
+    val selected = if (names.isEmpty) cases else cases.filter(c => names.contains(c.name))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val factors = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 10)
-    val spark = Harness.session(cpus)
-
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val rows = f
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-
-    factors.foreach { n =>
-      val docs = replicated(spark, sfDir, n).localCheckpoint(true)
-      val nDocs = docs.count()
-      val (tLsh, pairs) = time {
-        graft.ops.Dedup.minhashLshPairs(docs, "doc_id", "text", 0.1).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs2 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tCluster, clusters) = time {
-        val pairsDf = graft.ops.Dedup
-          .minhashLshPairs(docs2, "doc_id", "text", 0.1)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        graft.ops.Dedup.labelPropagation(pairsDf).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs3 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tPack, packed) = time {
-        val toks = docs3.select(col("doc_id"),
-          size(graft.ops.TextStats.words(col("text"))).cast("long").as("n_tokens"))
-        graft.ops.PrefixSum.exclusive(
-          toks, "doc_id", "n_tokens", spark.sparkContext.defaultParallelism)
-          .count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs4 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSim, simPairs) = time {
-        graft.ops.Dedup.simhashPairsOf(docs4).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs5 = replicated(spark, sfDir, n).localCheckpoint(true)
-      // a bare count() lets column pruning DROP the reassembly (the
-      // collect_list/array_sort kept_text is the expensive half) — the
-      // probe aggregates over kept_text so the full operator runs
-      val (tPrune, pruned) = time {
-        graft.ops.TextStats.dfPruneOf(docs5)
-          .agg(count(lit(1)).as("n"),
-            sum(length(col("kept_text"))).as("chars"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // the eval set grows with n here (salted copies shingle-disjoint),
-      // so this measures the corpus-side probe stream against a bitmap
-      // whose fill also grows — the conservative direction
-      val docs6 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tBloom, bloomRows) = time {
-        graft.ops.Sketch.bloomDecontaminateOf(docs6)
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_bloom_hits")).as("hits"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // exact Jaccard: salted copies are shingle-disjoint, so the
-      // inverted index's Σ df² candidate volume grows linearly in n —
-      // the curve that evidences the all-pairs → inverted-index rewrite
-      val docs7 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tJac, jacPairs) = time {
-        graft.ops.Dedup.ngramJaccardPairsOf(docs7).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val emb = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val nVecs = emb.count()
-      val (tIvf, ivfRows) = time {
-        graft.ops.Similarity.ivfTopKOf(emb,
-          trainCap = graft.ops.Similarity.IvfTrainCap).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val emb2 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tKnn, knnEdges) = time {
-        graft.ops.Similarity.knnGraphOf(emb2).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // dd5: banded sign-LSH near-dup pairs; the derived geometry
-      // (bands × per-band planes) self-sizes from the corpus count —
-      // logged per scale so the curve carries its own explanation
-      // (per-band buckets grow as 2^planes ∝ n, holding Σ bucket²
-      // candidate volume ~linear). Both this count and the builder's
-      // internal one scan the LOCALCHECKPOINTED blocks (emb3), not
-      // the replication transform — cheap, and deliberately uncached
-      // (Materialize.cachedCount skips LogicalRDD-rooted plans)
-      val emb3 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val dd5Planes = graft.ops.Dedup.embBandPlanesFor(emb3.count())
-      val (tNd, ndPairs) = time {
-        graft.ops.Dedup.embeddingNearDupOf(emb3).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // j4: anti-join MERGE on replicated orders — both sides of the
-      // upsert grow linearly; the join is keyed (no broadcast of the
-      // growing side at scale is the claim under test)
-      val ord = replicatedOrders(spark, sfDir, n).localCheckpoint(true)
-      val (tMerge, mergedRows) = time {
-        graft.merge.Upsert.mergeOrdersOf(ord).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // j6b: bucketed as-of with the key domain held at 150 (the
-      // driver query's shape), so per-(key, bucket) groups grow
-      // linearly in n — the hot-key direction the bucketed two-phase
-      // carry exists to bound; the aggregate consumes the carried
-      // payload so column pruning can't drop phase 2
-      val ev6 = replicatedEvents(spark, sfDir, n).localCheckpoint(true)
-      val ord6 = replicatedOrders(spark, sfDir, n).localCheckpoint(true)
-      val (tAsof, asofRows) = time {
-        val ev = ev6.select((col("user_id") % 150).as("k"),
-          date_trunc("second", col("ts")).as("t"), col("event_id"))
-        val o = ord6
-          .select((col("o_custkey") % 150).as("k"),
-            col("o_orderdate").as("t"), col("o_orderkey"))
-          .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
-        graft.ops.AsOf.asofLeftBucketed(ev, o, "o_orderkey")(
-            t => floor(unix_timestamp(t) / 86400L).cast("long"))
-          .agg(count(lit(1)).as("n"), sum(col("asof_o_orderkey")).as("s"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // dd10: salted copies share zero grams, so both the Σ df²
-      // candidate volume on the anchor hash and the true span set grow
-      // linearly in n — superlinear time here would mean the anchor df
-      // head is quadratic, the failure the df-cap mitigation would fix
-      val docs8 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSpan, spanRows) = time {
-        graft.ops.Dedup.duplicateSpansOf(docs8).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // tx18: the first-occurrence window partitions by segment text;
-      // salted copies make segments copy-disjoint, so partition count
-      // grows ∝ n with bounded partition size — the aggregate consumes
-      // kept_text so pruning can't drop the reassembly half
-      val docs9 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSeg, segKept) = time {
-        graft.ops.TextStats.segmentDedupOf(docs9)
-          .agg(sum(col("n_kept")).as("k"),
-            sum(length(col("kept_text"))).as("chars"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // g1: kNN build (the sim4 probe's cost) + 5 fixed integer
-      // rounds, each a keyed join + keyed agg over node-sized tables —
-      // the incremental cost over sim4 should stay a small constant
-      // factor at every scale
-      val emb4 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tPr, prNodes) = time {
-        graft.ops.Similarity.knnPagerankOf(emb4).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // g2: kNN build + the compact-forward wedge join. Degree-ordered
-      // orientation bounds every out-degree by O(sqrt(m)), so wedge
-      // volume tracks edge count; sign-flipped copies keep kNN edges
-      // within copies, so Σ triangles is linear by construction — a
-      // superlinear time curve here would mean the orientation failed
-      // to tame a hub. The aggregate consumes the triangle column so
-      // pruning can't drop the wedge join.
-      val emb5 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tTri, triSum) = time {
-        graft.ops.Graph.knnTrianglesOf(emb5)
-          .agg(sum(col("triangles")).as("t")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // w6: ONE shuffle on user_id with the user domain fixed, so
-      // per-user sorted lists grow ∝ n — the hot-key direction for the
-      // sort_array fold; time should stay ~linear (sort is n log n in
-      // the per-user list, lists are replication-bounded)
-      val ev7 = replicatedEvents(spark, sfDir, n).localCheckpoint(true)
-      val (tFun, funUsers) = time {
-        graft.model.Analytics.funnelOf(ev7)
-          .agg(sum(col("users")).as("u")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // dd13: dd10's span table + a per-doc interval merge — the merge
-      // window partitions by doc_id (bounded groups), so the curve
-      // should track dd10's span curve; the aggregate consumes
-      // dup_tokens so the merge half can't be pruned away
-      val docsA = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tCov, covDocs) = time {
-        graft.ops.Dedup.duplicateCoverageOf(docsA)
-          .agg(count(lit(1)).as("n"), sum(col("dup_tokens")).as("d"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // tx22: the (source, shingle) distinct grows ∝ n; after the
-      // distinct the per-hash fanout is bounded by the FIXED source
-      // count, so candidate rows also grow ∝ n — the pair matrix
-      // itself stays sources², constant
-      val docsB = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSrc, srcPairs) = time {
-        graft.ops.TextStats.sourceOverlapOf(docsB)
-          .agg(count(lit(1)).as("n"), sum(col("shared")).as("sh"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // tx25: salted copies are shingle-disjoint, so the
-      // first-occurrence aggregation's key space grows ∝ n with
-      // per-shingle df unchanged; output rows are exactly the docs —
-      // the aggregate consumes n_novel so the join-back can't prune
-      val docsC = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tNov, novSum) = time {
-        graft.ops.TextStats.ngramNoveltyOf(docsC)
-          .agg(count(lit(1)).as("n"), sum(col("n_novel")).as("nv"))
-          .collect()(0).getLong(1)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // w7: user domain fixed → per-user event lists grow ∝ n (the
-      // hot-key direction for the lead window); the transition matrix
-      // stays O(types²) so only the window stage scales
-      val ev8 = replicatedEvents(spark, sfDir, n).localCheckpoint(true)
-      val (tMkv, mkvSum) = time {
-        graft.model.Analytics.markovTransitionsOf(ev8)
-          .agg(sum(col("n")).as("transitions"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // q21a: fresh orderkeys per copy keep each order's supplier set
-      // intact, so returned rows, the distinct (order, supplier) table
-      // and the semi/anti probe volumes all grow ∝ n with per-orderkey
-      // fanout unchanged — superlinear time would mean the <> conjunct
-      // degraded the keyed joins
-      val li = replicatedLineitem(spark, sfDir, n).localCheckpoint(true)
-      val (tBlame, blameSum) = time {
-        graft.model.Pricing.soleBlameOf(li, Tables.supplier(spark, sfDir))
-          .agg(sum(col("numwait")).as("w")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // kmv1: the (source, hash) distinct grows ∝ n (copies are
-      // shingle-disjoint); the bucket-cutoff prefilter keeps the
-      // per-source top-k sort input ~constant, and the pair stage is
-      // sources² regardless of n — so the curve should track the
-      // distinct alone
-      val docsD = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tKmv, kmvPairs) = time {
-        graft.ops.Sketch.kmvSetOpsOf(docsD)
-          .agg(count(lit(1)).as("n"), sum(col("n_common")).as("c"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // tx30: every stage is a doc-keyed window or (doc, pos) join
-      // over per-copy-bounded documents — the merge-application round
-      // must stay linear for BPE training to be viable at corpus scale
-      val docsE = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tBpe, bpeSum) = time {
-        graft.ops.TextStats.bpeMergeRoundOf(docsE)
-          .agg(sum(col("n_occurrences")).as("s")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // sim8: training collects only PqSub × codes × subdim stats per
-      // round; encoding + ADC is one projection + broadcast lookups, so
-      // the curve should be ~linear in the corpus with a fixed offset
-      val emb6 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tPq, pqRows) = time {
-        graft.ops.Similarity.pqTopKOf(emb6).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // rl1: the FastSS blocking keys inherit the near-unique low
-      // digits, so candidates and links must both grow ∝ n (copies
-      // shift keys by 11M — two digit positions apart, so a single
-      // 'x' substitution can never bridge copies and the true link
-      // structure is per-copy by construction). The pre-fix left-half
-      // blocking measured 21 s at 1× — this curve guards the rewrite.
-      val cust = replicatedCustomer(spark, sfDir, n).localCheckpoint(true)
-      val nCust = cust.count()
-      val (tRl, rlLinks) = time {
-        graft.ops.Linkage.recordLinkageOf(cust).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // g7: kNN build + ≤6 BFS rounds of frontier join + min-struct
-      // agg. Sign-flipped copies keep edges within copies and each
-      // copy carries its own ∝ n/97 seed slice, so reached counts grow
-      // ∝ n; rounds are diameter-capped, so the curve should track
-      // sim4's build plus a flat per-round keyed-join cost — the probe
-      // consumes dist so the propagation stages can't prune away
-      val emb7 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tBfs, bfsReached) = time {
-        graft.ops.Graph.bfsLandmarksOf(emb7)
-          .agg(sum(col("reached")).as("r"), sum(col("dist")).as("d"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // ord2: one PrefixSum pass over the bucket-major key — per-
-      // partition windows + O(partitions) driver offsets — so the
-      // curve should track the corpus linearly at any bucket skew
-      // (salted copies keep n_chars, so bucket POPULATIONS grow ∝ n
-      // while the bucket count stays fixed: the exact hot-key shape a
-      // per-bucket window would die on). The aggregate consumes
-      // schedule_key so pruning can't drop the rank machinery.
-      val docsF = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tCur, curKeyMax) = time {
-        graft.ops.Sampling
-          .curriculumOrderOf(docsF, spark.sparkContext.defaultParallelism)
-          .agg(max(col("schedule_key")).as("m"), count(lit(1)).as("c"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // dd4 under a GLOBAL hot shingle: the same unsalted 3-token
-      // footer on every doc of every copy gives ONE shingle df = full
-      // corpus — the Σdf² detonation the PPJoin prefix filter exists
-      // to absorb (the unfiltered index would grow ∝ (n·docs)² on this
-      // corpus). The footer is deliberately SHORT: its solo Jaccard
-      // contribution 1/(n_a+n_b-1) < 1/10 for every pair, so the true
-      // pair structure stays the salted copies' linear one and output
-      // size cannot explain a superlinear bend.
-      val docsG = replicated(spark, sfDir, n)
-        .withColumn("text", concat(col("text"), lit(" all rights reserved")))
-        .localCheckpoint(true)
-      val (tJacB, jacBPairs) = time {
-        graft.ops.Dedup.ngramJaccardPairsOf(docsG).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // the DISTRIBUTED pointer-jumping connected-components path,
-      // forced past the driver union-find switch (localThreshold=0):
-      // per-copy-disjoint LSH pair graphs keep components and diameter
-      // per-copy-bounded, so rounds stay O(log d) = constant across
-      // factors and the curve should be ~linear in edges — the measured
-      // form of the warehouse-scale claim dd7/dd8 ride on.
-      val docsH = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tDcc, dccLabeled) = time {
-        val pairsDf = graft.ops.Dedup
-          .minhashLshPairs(docsH, "doc_id", "text", 0.1)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        graft.ops.Dedup.labelPropagation(pairsDf, localThreshold = 0L).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      println(f"""{"factor":$n,"docs":$nDocs,"lsh_sec":$tLsh%.2f,"pairs":$pairs,""" +
-        f""""cluster_sec":$tCluster%.2f,"labeled":$clusters,""" +
-        f""""pack_sec":$tPack%.2f,"packed":$packed,""" +
-        f""""simhash_sec":$tSim%.2f,"sim_pairs":$simPairs,""" +
-        f""""dfprune_sec":$tPrune%.2f,"pruned":$pruned,""" +
-        f""""bloom_sec":$tBloom%.2f,"bloom_rows":$bloomRows,""" +
-        f""""jaccard_sec":$tJac%.2f,"jac_pairs":$jacPairs,""" +
-        f""""vecs":$nVecs,"ivf_sec":$tIvf%.2f,"ivf_rows":$ivfRows,""" +
-        f""""knn_sec":$tKnn%.2f,"knn_edges":$knnEdges,""" +
-        f""""neardup_sec":$tNd%.2f,"nd_pairs":$ndPairs,""" +
-        f""""dd5_bands":${graft.ops.Dedup.EmbBands},"dd5_planes":$dd5Planes,""" +
-        f""""merge_sec":$tMerge%.2f,"merged":$mergedRows,""" +
-        f""""asof_sec":$tAsof%.2f,"asof_rows":$asofRows,""" +
-        f""""span_sec":$tSpan%.2f,"span_rows":$spanRows,""" +
-        f""""segdedup_sec":$tSeg%.2f,"seg_kept":$segKept,""" +
-        f""""coverage_sec":$tCov%.2f,"cov_docs":$covDocs,""" +
-        f""""srcoverlap_sec":$tSrc%.2f,"src_pairs":$srcPairs,""" +
-        f""""pagerank_sec":$tPr%.2f,"pr_nodes":$prNodes,""" +
-        f""""tri_sec":$tTri%.2f,"tri_sum":$triSum,""" +
-        f""""funnel_sec":$tFun%.2f,"funnel_users":$funUsers,""" +
-        f""""novelty_sec":$tNov%.2f,"novel_sum":$novSum,""" +
-        f""""markov_sec":$tMkv%.2f,"transitions":$mkvSum,""" +
-        f""""blame_sec":$tBlame%.2f,"blame_sum":$blameSum,""" +
-        f""""kmv_sec":$tKmv%.2f,"kmv_pairs":$kmvPairs,""" +
-        f""""bpe_sec":$tBpe%.2f,"bpe_sum":$bpeSum,""" +
-        f""""pq_sec":$tPq%.2f,"pq_rows":$pqRows,""" +
-        f""""cust":$nCust,"rl_sec":$tRl%.2f,"rl_links":$rlLinks,""" +
-        f""""bfs_sec":$tBfs%.2f,"bfs_reached":$bfsReached,""" +
-        f""""curriculum_sec":$tCur%.2f,"cur_key_max":$curKeyMax,""" +
-        f""""jacboiler_sec":$tJacB%.2f,"jacboiler_pairs":$jacBPairs,""" +
-        f""""distcc_sec":$tDcc%.2f,"distcc_labeled":$dccLabeled}""")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    for (n <- factors; c <- selected) {
+      val (sec, rows, parts) = run(spark, sfDir, n, c)
+      println(f"""{"factor":$n,"case":"${c.name}","sec":$sec%.2f,""" +
+        f""""rows":$rows,"parts":$parts}""")
     }
     spark.stop()
-  }
-
-  /** Events replicated N× (fresh event_ids; user_id kept, so the
-    * as-of key domain stays fixed and per-key density grows with N —
-    * the hot-key direction). */
-  def replicatedEvents(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.events(s, d)
-    (0 until n).map { i =>
-      base.withColumn("event_id",
-        col("event_id") + lit(i.toLong * 10_000_000L))
-    }.reduce(_ unionByName _)
-  }
-
-  /** Lineitem replicated N× (fresh orderkeys; suppkeys/flags kept, so
-    * each copy carries the base corpus's per-order supplier sets and
-    * the q21a probe volumes grow linearly on an unchanged per-key
-    * fanout). */
-  /** Customers replicate with RE-DERIVED names ('Customer#%09d' of the
-    * shifted key), keeping the 18-char shape rl1's corruption rules and
-    * blocking positions assume. The 11M stride makes any two copies'
-    * digit strings differ in ≥2 positions, and the corruption alphabet
-    * ('x', never a digit) cannot close that gap — so cross-copy
-    * lev ≤ 1 links are impossible and the true link set is exactly the
-    * per-copy union. */
-  def replicatedCustomer(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.customer(s, d)
-    (0 until n).map { i =>
-      val key = col("c_custkey") + lit(i.toLong * 11_000_000L)
-      base.select(key.as("c_custkey"),
-        format_string("Customer#%09d", key).as("c_name"),
-        col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
-    }.reduce(_ unionByName _)
-  }
-
-  def replicatedLineitem(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.lineitem(s, d)
-    (0 until n).map { i =>
-      base.withColumn("l_orderkey",
-        col("l_orderkey") + lit(i.toLong * 10_000_000L))
-    }.reduce(_ unionByName _)
-  }
-
-  /** Orders replicated N× (fresh orderkeys; dates/prices/custkeys
-    * kept, so the merge filters and the as-of build side scale
-    * linearly on the same domains). */
-  def replicatedOrders(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.orders(s, d)
-    (0 until n).map { i =>
-      base.withColumn("o_orderkey",
-        col("o_orderkey") + lit(i.toLong * 10_000_000L))
-    }.reduce(_ unionByName _)
-  }
-
-  /** Embeddings replicated N× with each copy's vectors multiplied by a
-    * copy-indexed DETERMINISTIC ±1 sign diagonal. Within a copy every
-    * dot product is exactly preserved (the signs square to 1), so each
-    * copy carries the base corpus's true near-dup structure; ACROSS
-    * copies the independent sign patterns decorrelate cosines toward 0
-    * (a ±1-weighted sum of the coordinate products), so cross-copy
-    * pairs at any material threshold vanish and the TRUE pair
-    * structure is linear in N by construction — the property the
-    * earlier circular-shift replication only approximated (shifts
-    * leave enough cross-copy correlation at cosine ≥ 0.4 to make the
-    * pair count superlinear, measuring the data instead of the
-    * engine). Copy 0 is the identity, so the base corpus rides
-    * unchanged; vec_id 0 (the ANN query vector) stays unique to
-    * copy 0. Sign patterns also vary the fixed LSH hyperplane buckets
-    * per copy (h·(Dv) = (Dh)·v), so copies spread instead of
-    * stacking. */
-  def replicatedEmb(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.embeddings(s, d)
-    val dim = graft.ops.Similarity.Dim
-    (0 until n).map { i =>
-      val flipped =
-        if (i == 0) col("embedding")
-        else {
-          val signs = (0 until dim).map { j =>
-            // full avalanche mix (splitmix64 finalizer), NOT a linear
-            // walk: a linear (i·a + j·b) pattern makes the RELATIVE
-            // sign vector between two copies a threshold function of
-            // one offset — copies whose offsets land near 0 (mod 2^k)
-            // are near-clones, and the cross-copy pair count explodes
-            // superlinearly (observed 611× at 40× with bit-7 of a
-            // 55-per-step walk). After mixing, relative patterns are
-            // balanced for every copy pair.
-            var h = i.toLong * 0x9E3779B97F4A7C15L +
-              j.toLong * 0xC2B2AE3D27D4EB4FL
-            h ^= h >>> 33; h *= 0xFF51AFD7ED558CCDL; h ^= h >>> 33
-            if ((h & 1L) == 0L) 1.0f else -1.0f
-          }
-          zip_with(col("embedding"),
-            array(signs.map(lit): _*),
-            (x, sgn) => x * sgn)
-        }
-      base.select(
-        (col("vec_id") + lit(i.toLong * 10_000_000L)).as("vec_id"),
-        col("label"), flipped.as("embedding"))
-    }.reduce(_ unionByName _)
   }
 }

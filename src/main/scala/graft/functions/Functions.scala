@@ -27,10 +27,6 @@ object Functions {
     * HALF_UP-vs-value rounding divergence between engines cannot bite. */
   def cents(c: Column): Column = round(c * 100).cast("long")
 
-  /** Exact average of a 2-decimal column: integer-cents sum divided by
-    * count, then scaled back — identical doubles in Spark and DuckDB. */
-  def avgExact(c: Column): Column = sum(cents(c)) / count(lit(1)) / 100.0
-
   /** P14 — severity CASE chain (reference
     * dbt_files/models/core/fact_earthquake_data.sql:9-16), re-based onto the
     * generic magnitude-like column with thresholds supplied by the caller. */
@@ -55,10 +51,6 @@ object Functions {
   val priceSeverityThresholds: Seq[(Double, String)] = Seq(
     400000.0 -> "Great", 300000.0 -> "Major", 200000.0 -> "Strong",
     100000.0 -> "Moderate", 50000.0 -> "Light")
-
-  /** P15 — `extract(year from ts)`
-    * (reference fact_earthquake_data.sql:17). */
-  def eventYear(ts: Column): Column = year(ts)
 
   /** P16 — decade macro: `cast(floor(year/10)*10 as int64)`
     * (reference dbt_files/macros/get_decade.sql:5-9). Division of int by

@@ -383,12 +383,6 @@ object Dedup {
   /** The materialized hashed-shingle stream (doc_id, lang, h) the exact
     * set-similarity family reads — md5 per distinct 3-gram shingle is
     * the dominant scan cost, computed once per query. */
-  private[graft] def shingleFlatProbe(docs: DataFrame): DataFrame =
-    shingleFlat(docs, Materialize.Local)
-
-  private[graft] def prefixShinglesProbe(flat: DataFrame): DataFrame =
-    prefixShingles(flat, JaccardThresholdNum, JaccardThresholdDen)
-
   private def shingleFlat(docs: DataFrame,
       mode: Materialize.Mode): DataFrame =
     Materialize(

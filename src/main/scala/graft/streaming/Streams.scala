@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming facade for the reference's incremental/temporal
   * semantics (SURVEY.md §2.9). The reference is batch-only (@monthly
@@ -124,11 +123,6 @@ object Streams {
           TypeUpdate(key, next.n, next.sum)
       }
   }
-
-  /** File-source stream over a directory of parquet (the batch tables
-    * replayed as a stream for tests/demos). */
-  def parquetStream(s: SparkSession, dir: String, schema: StructType): DataFrame =
-    s.readStream.schema(schema).parquet(dir)
 
   /** Stream-stream INTERVAL join (the attribution shape): each purchase
     * joins the clicks by the same user that preceded it within

@@ -77,4 +77,13 @@ class BenchSpec extends AnyFunSuite {
     // boundary: exactly 2x and exactly 0.5 s delta flags
     assert(Bench.loadFlagged(loadStart = 1.0, p50 = 1.0, minRun = 0.5))
   }
+
+  test("loadFlagged applies the rule to the millisecond values the artifact prints") {
+    // the tx28 shape: prints as p50 1.184 = 2 x min 0.592 on a loaded
+    // start, while the raw doubles sit just under 2x
+    assert(Bench.fmt(1.1839, 3) == "1.184" && Bench.fmt(0.59204, 3) == "0.592")
+    assert(Bench.loadFlagged(loadStart = 1.43, p50 = 1.1839, minRun = 0.59204))
+    // and the converse: raw values at 2x that print under it stay clean
+    assert(!Bench.loadFlagged(loadStart = 1.43, p50 = 1.1834, minRun = 0.5916))
+  }
 }
